@@ -69,14 +69,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
-
-
 def read_pipe_delimited(
     spark: SparkSession, path: str, schema: StructType, header: bool = False
 ) -> DataFrame:
@@ -91,20 +83,6 @@ def read_pipe_delimited(
         sep="|",
         quote="\u0000",  # effectively "no quoting", like quote_character=""
         header=header,
-        schema=schema,
-        nullValue="",
-        mode="PERMISSIVE",
-    )
-
-
-def read_headed_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """FEC ``.csv`` reader: header row + standard quoting
-    (``import_bigquery/main.py:34-41``: skip_leading_rows=1, quote='\"')."""
-    return spark.read.csv(
-        path,
-        header=True,
-        quote='"',
-        escape='"',
         schema=schema,
         nullValue="",
         mode="PERMISSIVE",
@@ -1356,6 +1334,25 @@ def _json_stat(v, down: bool | None = None):
 
 def _is_nan(v) -> bool:
     return isinstance(v, float) and v != v
+
+
+_ISO_DATETIME_RE = re.compile(
+    r"[0-9]{4}-[0-9]{2}-[0-9]{2}( [0-9]{2}:[0-9]{2}:[0-9]{2}(\.[0-9]{1,6})?)?"
+)
+
+
+def _day_at_midnight(v, peer):
+    """``v`` as ``'<day> 00:00:00'`` when it is a bare ISO date and
+    ``peer`` a timestamp's ISO text, else ``v``. Spark compares a date
+    with a timestamp at the date's midnight, but the plain texts order
+    the bare date below every time of its day, which would skip files
+    holding matching rows. On other columns the widening only keeps
+    more files."""
+    day, ts = (
+        _ISO_DATETIME_RE.fullmatch(x) if isinstance(x, str) else None
+        for x in (v, peer)
+    )
+    return v + " 00:00:00" if day and ts and not day[1] and ts[1] else v
 
 
 # Parquet (physical_type, converted_type) pairs whose FOOTER statistics
@@ -3172,244 +3169,97 @@ def last_committed_batch_id(table_path: str) -> int | None:
     return max(ids) if ids else None
 
 
-_SQL_TOKEN_RE = re.compile(
-    r"""\s*(?:
-      (?P<str>'(?:[^']|'')*')
-    | (?P<num>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
-    | (?P<ident>[A-Za-z_][A-Za-z0-9_]*)
-    | (?P<op><>|!=|>=|<=|==|=|<|>)
-    | (?P<punct>[(),])
-    | (?P<arith>[%*/+\-.])
-    )""",
-    re.X,
-)
+# comparison node -> which of (lo, hi) a ``col <op> literal`` conjunct
+# bounds; strict bounds relax to inclusive (skipping needs only a superset)
+_BOUND_SIDES = {
+    "EqualTo": (True, True),
+    "GreaterThan": (True, False),
+    "GreaterThanOrEqual": (True, False),
+    "LessThan": (False, True),
+    "LessThanOrEqual": (False, True),
+}
+_NUMERIC_LITERALS = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 
-def _sql_tokens(s: str) -> list | None:
-    """Tokenize an ANSI boolean predicate into (kind, value) pairs;
-    None when anything unrecognized appears (the caller then derives
-    no prune and relies on the residual filter alone)."""
-    out, pos = [], 0
-    while pos < len(s):
-        m = _SQL_TOKEN_RE.match(s, pos)
-        if m is None:
-            return None if s[pos:].strip() else out
-        pos = m.end()
-        for kind in ("str", "num", "ident", "op", "punct", "arith"):
-            v = m.group(kind)
-            if v is not None:
-                out.append((kind, v))
-                break
-    return out
-
-
-def _split_conjuncts(toks: list) -> list[list]:
-    """Split a token list on top-level ``AND`` — parenthesized groups
-    stay whole, and the ``AND`` inside a top-level ``BETWEEN .. AND ..``
-    belongs to the BETWEEN, not the conjunction."""
-    out, cur, depth, between_pending = [], [], 0, 0
-    for t in toks:
-        kind, v = t
-        if kind == "punct" and v == "(":
-            depth += 1
-        elif kind == "punct" and v == ")":
-            depth -= 1
-        elif kind == "ident" and depth == 0:
-            u = v.upper()
-            if u == "BETWEEN":
-                between_pending += 1
-            elif u == "AND":
-                if between_pending:
-                    between_pending -= 1
-                else:
-                    out.append(cur)
-                    cur = []
-                    continue
-        cur.append(t)
-    out.append(cur)
-    return out
-
-
-def _sql_literal(toks: list):
-    """Parse a leading literal; returns (python value, tokens consumed)
-    or None. ``DATE '...'`` / ``TIMESTAMP '...'`` yield the ISO string,
-    which orders lexicographically like the recorded stats do."""
-    if not toks:
-        return None
-    kind, v = toks[0]
-    if kind == "num":
-        f = float(v)
-        return (int(v) if f.is_integer() and "." not in v and "e" not in v.lower() else f, 1)
-    if kind == "str":
-        return (v[1:-1].replace("''", "'"), 1)
-    if (
-        kind == "ident"
-        and v.upper() in ("DATE", "TIMESTAMP")
-        and len(toks) > 1
-        and toks[1][0] == "str"
-    ):
-        return (toks[1][1][1:-1].replace("''", "'"), 2)
+def _where_column(e) -> str | None:
+    """A parsed node's column name when it is a bare, unqualified one."""
+    if e.nodeName() == "UnresolvedAttribute" and e.nameParts().size() == 1:
+        return e.name()
     return None
 
 
-def _conjunct_triples(c: list) -> list[tuple]:
-    """Prune triples derivable from ONE conjunct — a simple
-    single-column range/equality/BETWEEN/IN comparison against
-    literals; anything else (OR, NOT, arithmetic, function calls, IS
-    NULL, subqueries) derives nothing and is handled by the residual
-    filter alone. Strict bounds relax to inclusive ones (file skipping
-    needs only a superset of the matching files)."""
-    # a fully-parenthesized group may itself be a conjunction
-    while (
-        len(c) >= 2
-        and c[0] == ("punct", "(")
-        and c[-1] == ("punct", ")")
-    ):
-        depth = 0
-        for i, t in enumerate(c):
-            if t == ("punct", "("):
-                depth += 1
-            elif t == ("punct", ")"):
-                depth -= 1
-                if depth == 0 and i < len(c) - 1:
-                    break  # the leading paren closes early: not a shell
-        else:
-            c = c[1:-1]
-            subs = _split_conjuncts(c)
-            if len(subs) > 1:
-                return [t for s in subs for t in _conjunct_triples(s)]
-            continue
-        break
-    if any(
-        k == "ident" and v.upper() in ("OR", "NOT", "IS", "LIKE", "RLIKE")
-        for k, v in c
-    ):
-        return []
-    # col op literal
-    if len(c) >= 3 and c[0][0] == "ident" and c[1][0] == "op":
-        lit = _sql_literal(c[2:])
-        if lit is not None and 2 + lit[1] == len(c):
-            col, op, v = c[0][1], c[1][1], lit[0]
-            if op in ("=", "=="):
-                return [(col, v, v)]
-            if op in (">=", ">"):
-                return [(col, v, None)]
-            if op in ("<=", "<"):
-                return [(col, None, v)]
-            return []
-    # literal op col (flipped)
-    lit = _sql_literal(c)
-    if (
-        lit is not None
-        and len(c) == lit[1] + 2
-        and c[lit[1]][0] == "op"
-        and c[lit[1] + 1][0] == "ident"
-    ):
-        v, op, col = lit[0], c[lit[1]][1], c[lit[1] + 1][1]
-        if op in ("=", "=="):
-            return [(col, v, v)]
-        if op in (">=", ">"):
-            return [(col, None, v)]
-        if op in ("<=", "<"):
-            return [(col, v, None)]
-        return []
-    # col BETWEEN lit AND lit
-    if (
-        len(c) >= 5
-        and c[0][0] == "ident"
-        and c[1][0] == "ident"
-        and c[1][1].upper() == "BETWEEN"
-    ):
-        lo = _sql_literal(c[2:])
-        if lo is not None:
-            i = 2 + lo[1]
-            if i < len(c) and c[i][0] == "ident" and c[i][1].upper() == "AND":
-                hi = _sql_literal(c[i + 1 :])
-                if hi is not None and i + 1 + hi[1] == len(c):
-                    return [(c[0][1], lo[0], hi[0])]
-        return []
-    # col IN (lit, lit, ...)
-    if (
-        len(c) >= 5
-        and c[0][0] == "ident"
-        and c[1][0] == "ident"
-        and c[1][1].upper() == "IN"
-        and c[2] == ("punct", "(")
-        and c[-1] == ("punct", ")")
-    ):
-        vals, i = [], 3
-        while i < len(c) - 1:
-            lit = _sql_literal(c[i:])
-            if lit is None:
-                return []
-            vals.append(lit[0])
-            i += lit[1]
-            if i < len(c) - 1:
-                if c[i] != ("punct", ","):
-                    return []
-                i += 1
-        kinds = {type(v) in (int, float) for v in vals}
-        if vals and len(kinds) == 1:
-            try:
-                return [(c[0][1], min(vals), max(vals))]
-            except TypeError:
-                return []
-    return []
+def _where_literal(e):
+    """A parsed ``Literal`` as the Python value the manifest stats
+    compare against, or None (NULL, booleans, binary, intervals,
+    non-literals). Dates and timestamps become the ISO text the stats
+    record: ``str(datetime)`` has six fraction digits, Spark drops
+    trailing zeros."""
+    if e.nodeName() != "Literal":
+        return None
+    t = e.dataType().simpleString()  # "void" for NULL
+    if t == "date":
+        return e.toString()
+    if t in ("timestamp", "timestamp_ntz"):
+        head, dot, frac = e.toString().partition(".")
+        return head + dot + frac.ljust(6, "0") if dot else head
+    if t == "string":
+        return e.value().toString()
+    if t.startswith("decimal"):
+        return float(e.value().toString())
+    return e.value() if t in _NUMERIC_LITERALS else None
 
 
-def _derive_in_values(where: str) -> dict[str, list]:
-    """The exact value lists of top-level ``col IN (lit, ...)``
-    conjuncts — the membership complement of ``_conjunct_triples``'
-    [min, max] collapse: a bloom probe wants the listed values
-    themselves (P9 ids-in probes), not their envelope. Same
-    conservative contract: a conjunct that doesn't match the shape
-    contributes nothing, and consumers only ever use the result to
-    SHRINK the files opened under the full residual filter."""
-    out: dict[str, list] = {}
-    for c in _split_conjuncts(_sql_tokens(where) or []):
-        if not (
-            len(c) >= 5
-            and c[0][0] == "ident"
-            and c[1][0] == "ident"
-            and c[1][1].upper() == "IN"
-            and c[2] == ("punct", "(")
-            and c[-1] == ("punct", ")")
+def _mine_where(spark: SparkSession, where: str) -> tuple[list[tuple], dict]:
+    """Prune triples and bloom-probe value lists from ``where``, parsed
+    as the residual ``F.expr(where)`` is. Only top-level ``AND`` is
+    descended: a single-column equality, range, ``BETWEEN`` or ``IN``
+    against literals derives a ``(col, lo, hi)`` triple, and an
+    equality or ``IN`` its value list (the shortest per column wins).
+    ``OR``, ``NOT``, ``<>``, arithmetic, functions, ``IS NULL`` derive
+    nothing."""
+    triples: list[tuple] = []
+    probe: dict[str, list] = {}
+
+    def walk(e) -> None:
+        kind = e.nodeName()
+        if kind == "And":
+            walk(e.left())
+            walk(e.right())
+        elif kind in _BOUND_SIDES:
+            lo_side, hi_side = _BOUND_SIDES[kind]
+            col, v = _where_column(e.left()), _where_literal(e.right())
+            if col is None:  # literal first: ``5 >= a`` bounds a from above
+                col, v = _where_column(e.right()), _where_literal(e.left())
+                lo_side, hi_side = hi_side, lo_side
+            if col is not None and v is not None:
+                triples.append((col, v if lo_side else None, v if hi_side else None))
+                if kind == "EqualTo":
+                    probe[col] = [v]
+        elif kind == "In" or (
+            kind == "UnresolvedFunction"
+            and e.nameParts().mkString(".").lower() == "between"
         ):
-            continue
-        vals, i = [], 3
-        while i < len(c) - 1:
-            lit = _sql_literal(c[i:])
-            if lit is None:
-                vals = None
-                break
-            vals.append(lit[0])
-            i += lit[1]
-            if i < len(c) - 1:
-                if c[i] != ("punct", ","):
-                    vals = None
-                    break
-                i += 1
-        if vals:
-            col = c[0][1]
-            if col not in out or len(vals) < len(out[col]):
-                out[col] = vals
-    return out
+            args = e.children()
+            col = _where_column(args.apply(0))
+            vals = [_where_literal(args.apply(i)) for i in range(1, args.size())]
+            kinds = {isinstance(v, str) for v in vals}
+            if col is None or None in vals or len(kinds) != 1:
+                return
+            triples.append((col, min(vals), max(vals)))
+            if kind == "In" and (col not in probe or len(vals) < len(probe[col])):
+                probe[col] = vals
+
+    walk(spark._jsparkSession.sessionState().sqlParser().parseExpression(where))
+    return triples, probe
 
 
 def _derive_prune_triples(where: str) -> list[tuple]:
-    """Derive manifest-stats prune ranges from a SQL predicate's
-    top-level conjuncts — the ergonomic path to file skipping: callers
-    state the query's own filter once (``read_versioned(...,
-    where=...)``) instead of hand-computing ``prune`` triples. Purely
-    advisory: every derived range is a SUPERSET condition of its
-    conjunct, the full predicate is always re-applied as a residual
-    filter, and a conjunct this parser does not understand simply
-    derives nothing — so the answer can never depend on what was
-    derived, only the set of files opened can."""
-    toks = _sql_tokens(where)
-    if not toks:
-        return []
-    return [t for c in _split_conjuncts(toks) for t in _conjunct_triples(c)]
+    """Manifest-stats prune ranges from a SQL predicate's top-level
+    conjuncts (:func:`_mine_where` on the active session). Advisory:
+    each range is a superset of its conjunct and the full predicate
+    re-applies as a residual filter, so what is derived changes only
+    the files opened, never the answer."""
+    return _mine_where(SparkSession.active(), where)[0]
 
 
 def read_versioned(
@@ -3464,15 +3314,16 @@ def read_versioned(
     without rewriting history (each commit keeps the layout it was
     written under).
 
-    ``where``: an ANSI boolean predicate applied as a filter AND mined
-    for prune ranges (:func:`_derive_prune_triples`) — simple
-    range/equality/BETWEEN/IN conjuncts on stats-tracked columns skip
-    files exactly as explicit ``prune`` triples do, without the caller
-    computing them. The full predicate always re-applies on the scan
-    (answer-invariance by construction: derivation only widens the set
-    of files opened, never the rows returned); non-derivable conjuncts
-    (OR, expressions, functions) just don't prune. The ergonomic path
-    to manifest file skipping at 100 TB: state the query's filter once.
+    ``where``: a Spark SQL boolean predicate, applied as a filter and
+    read by Spark's own parser for file skipping (:func:`_mine_where`):
+    each top-level ``AND`` conjunct that compares one column with
+    literals (``=``, ``<``, ``<=``, ``>``, ``>=``, ``BETWEEN``, ``IN``)
+    prunes on stats-tracked columns exactly as an explicit ``prune``
+    triple does, and its equality or ``IN`` values probe the key bloom.
+    A conjunct under ``OR`` or ``NOT``, and any expression, function
+    call or ``IS NULL``, derives nothing. The full predicate always
+    re-applies on the scan, so derivation only changes the files
+    opened, never the rows returned.
 
     ``_keep_files`` (PRIVATE — tombstone pre-image recovery only):
     ``{commit_dir: {relative file, ...}}`` restricting listed commits
@@ -3483,34 +3334,20 @@ def read_versioned(
     over a no-false-negative bloom keep-set.
 
     ``_eq_probe`` (PRIVATE — set by the ``where`` branch only):
-    ``{col: literal}`` equality conjuncts mined from ``where``. When
-    the table maintains a key bloom over a subset of these columns,
-    the POINT LOOKUP consults it and opens only the files that can
-    contain the probed key — S9-style existence probes become O(files
-    containing the key) on a scattered table where the min/max
-    envelope skips nothing. Sound for the same reason ``where``
-    derivation is: the full predicate re-applies as the residual, and
-    blooms have no false negatives under the recorded convention."""
+    ``{col: [literal, ...]}`` equality and ``IN`` conjuncts mined from
+    ``where``. When the table's key bloom covers a subset of these
+    columns, only files that can hold a probed key are opened, which
+    makes point lookups O(files containing the key) on scattered
+    tables. Sound because the full predicate re-applies as the residual
+    and blooms have no false negatives."""
     import json
 
     if where is not None:
-        derived = _derive_prune_triples(where)
+        derived, eqs = _mine_where(spark, where)
         if derived:
-            base = (
-                [tuple(p) for p in prune]
-                if isinstance(prune, list)
-                else [tuple(prune)] if prune is not None else []
-            )
-            prune = base + derived
-        eqs = {
-            c: [lo]
-            for c, lo, hi in (derived or [])
-            if lo is not None and lo == hi
-        }
-        for col, vals in _derive_in_values(where).items():
-            # a plain equality (1 value) always beats an IN list on
-            # the same column; both are sound supersets of the rows
-            eqs.setdefault(col, vals)
+            if not isinstance(prune, list):
+                prune = [] if prune is None else [prune]
+            prune = prune + derived
         inner = read_versioned(
             spark,
             table_path,
@@ -3629,9 +3466,11 @@ def read_versioned(
                     break
                 if _is_nan(mn) or _is_nan(mx) or _is_nan(lo) or _is_nan(hi):
                     continue  # NaN compares False both ways: cannot skip
+                m = _day_at_midnight
                 try:
                     if not (
-                        (hi is None or mn <= hi) and (lo is None or mx >= lo)
+                        (hi is None or m(mn, hi) <= m(hi, mn))
+                        and (lo is None or m(mx, lo) >= m(lo, mx))
                     ):
                         ok = False
                         break

@@ -10,9 +10,12 @@ side is the union of all appended files, which is exactly what a
 parquet directory scan is.
 
 At cluster scale the anti-join is a broadcast join while the log is
-small and a shuffled hash join later; either way the pattern is safe to
-re-run (keys are appended only after a batch succeeds — replays are
-idempotent because downstream sinks merge on key).
+small and a shuffled hash join later. Keys are appended only after a
+batch's ``process`` returns, so a failed batch is re-drained, never
+lost. The drain is at-least-once, not exactly-once: a crash between
+``process(batch)`` and ``log.append(batch)`` re-drains that batch on the
+next run, and a sink that appends (the parquet doc sink does; it does
+not merge on key) then holds its documents twice.
 """
 
 from __future__ import annotations

@@ -32,8 +32,10 @@ from data_spark.io import (
 def _scattered_table(spark, tp, n=4000, commits=4, bloom=True):
     """n rows split round-robin across commits, so every commit's [min,
     max] envelope on k spans ~the whole domain — bounds pruning skips
-    nothing for any probe, the shape blooms exist for."""
-    base = spark.range(0, n).select(
+    nothing for any probe, the shape blooms exist for. Each commit is 16
+    files whatever the host's core count (``spark.range`` would
+    otherwise split by it)."""
+    base = spark.range(0, n, numPartitions=16).select(
         F.col("id").alias("k"), (F.col("id") % 101).cast("bigint").alias("v")
     )
     write_versioned(
@@ -456,6 +458,11 @@ def test_where_in_list_membership_probe(spark, tmp_path):
     # an IN list mixing representable values stays exact
     q3 = read_versioned(spark, tp, where="k IN (999998, 999999)")
     assert q3.count() == 0 and len(_data_files(q3)) == 0
+    # an IN list under OR probes nothing: the answer is the full filter's
+    w = "k IN (1, 2) AND v = 2 OR v = 3"
+    q4 = read_versioned(spark, tp, where=w)
+    full = read_versioned(spark, tp).filter(w)
+    assert sorted(map(tuple, q4.collect())) == sorted(map(tuple, full.collect()))
 
 
 def test_probe_cap_boundary_single_pass(spark, tmp_path, monkeypatch):

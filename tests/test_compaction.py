@@ -1477,6 +1477,13 @@ def test_read_versioned_where_derives_pruning(spark, tmp_path):
         tuple(r) for r in full.filter(F.expr(wm)).collect()
     )
 
+    # a conjunct under OR prunes nothing: the answer is the full filter's
+    wo = "k = 1 AND x = 2 OR x = 3"
+    od = read_versioned(spark, table, where=wo)
+    assert sorted(tuple(r) for r in od.collect()) == sorted(
+        tuple(r) for r in full.filter(F.expr(wo)).collect()
+    )
+
     # where= composes with an explicit prune triple (both AND)
     comp = read_versioned(
         spark, table, prune=("k", 2000, 2999), where="x <= 5"
@@ -1486,6 +1493,35 @@ def test_read_versioned_where_derives_pruning(spark, tmp_path):
         tuple(r)
         for r in full.filter((F.col("k").between(2000, 2999)) & (F.col("x") <= 5)).collect()
     )
+
+    # temporal bounds: a sub-second fraction and a DATE column against a
+    # TIMESTAMP literal must keep the file whose min/max is the bound
+    ttable = str(tmp_path / "tt")
+    tdf = spark.range(0, 400).select(
+        F.col("id"),
+        F.timestamp_micros(F.lit(1577836800_120000) + F.col("id") * 1_000_000)
+        .cast("timestamp_ntz")
+        .alias("ts"),
+        F.date_add(F.lit("2020-01-01").cast("date"), (F.col("id") / 10).cast("int")).alias("d"),
+    )
+    write_versioned(
+        tdf.repartitionByRange(8, "id").sortWithinPartitions("id"),
+        ttable,
+        "overwrite",
+        stats_cols=["ts", "d"],
+    )
+    tfull = read_versioned(spark, ttable)
+    for wt in (
+        "ts = TIMESTAMP '2020-01-01 00:00:50.120000'",
+        "ts <= TIMESTAMP '2020-01-01 00:00:50.12'",
+        "d >= TIMESTAMP '2020-01-10'",
+        "d = TIMESTAMP '2020-01-10'",
+    ):
+        want = sorted(tuple(r) for r in tfull.filter(F.expr(wt)).collect())
+        assert want, wt
+        td = read_versioned(spark, ttable, where=wt)
+        assert len(td.inputFiles()) < len(tfull.inputFiles()), wt
+        assert sorted(tuple(r) for r in td.collect()) == want, wt
 
 
 def test_derive_prune_triples_conservative(spark):
@@ -1504,6 +1540,9 @@ def test_derive_prune_triples_conservative(spark):
     assert d("ts >= TIMESTAMP '2020-01-01 00:00:00'") == [
         ("ts", "2020-01-01 00:00:00", None)
     ]
+    assert d("ts = TIMESTAMP '2020-01-01 00:00:00.12'") == [
+        ("ts", "2020-01-01 00:00:00.120000", "2020-01-01 00:00:00.120000")
+    ]
     for opaque in (
         "a > 5 OR b > 5",
         "NOT (a > 5)",
@@ -1513,5 +1552,7 @@ def test_derive_prune_triples_conservative(spark):
         "a LIKE 'x%'",
         "a <> 5",
         "a IN (1, 'x')",
+        "k = 1 AND v = 2 OR v = 3",
+        "k IN (1, 2) AND v = 2 OR v = 3",
     ):
         assert d(opaque) == [], opaque
